@@ -23,8 +23,8 @@ from __future__ import annotations
 import hashlib
 from typing import Dict, List
 
-from .goldman import bytes_to_dna
-from .reed_solomon import rs_parity_tail
+from .goldman import bytes_to_dna_many
+from .reed_solomon import rs_parity_tails
 
 DEFAULT_CHUNK_SIZE = 1000
 DEFAULT_RS_NSYM = 10
@@ -64,18 +64,22 @@ def build_chunks(
     nsym: int = DEFAULT_RS_NSYM,
 ) -> List[Dict]:
     """Full chunk records for one document (one dict per DNAChunk field set,
-    minus the always-empty ``original_binary`` -- see SURVEY.md §1.1)."""
-    records: List[Dict] = []
-    for i, piece in enumerate(chunk_utf8_bytes(text, chunk_size)):
-        records.append(
-            {
-                "chunk_id": f"dna_chunk_{i:03d}",
-                "index": i,
-                "dna_sequence": bytes_to_dna(piece),
-                "original_length_bytes": len(piece),
-                "error_correction_code": rs_parity_tail(piece, nsym),
-                "checksum": hashlib.md5(piece).hexdigest(),
-                "chunk_size": len(piece),
-            }
+    minus the always-empty ``original_binary`` -- see SURVEY.md §1.1).
+
+    The document's chunks go through the Goldman and Reed-Solomon kernels
+    together, one batched pass each."""
+    pieces = chunk_utf8_bytes(text, chunk_size)
+    return [
+        {
+            "chunk_id": f"dna_chunk_{i:03d}",
+            "index": i,
+            "dna_sequence": dna,
+            "original_length_bytes": len(piece),
+            "error_correction_code": ecc,
+            "checksum": hashlib.md5(piece).hexdigest(),
+            "chunk_size": len(piece),
+        }
+        for i, (piece, dna, ecc) in enumerate(
+            zip(pieces, bytes_to_dna_many(pieces), rs_parity_tails(pieces, nsym))
         )
-    return records
+    ]

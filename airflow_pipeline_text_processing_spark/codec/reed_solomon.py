@@ -16,6 +16,18 @@ tail of the interleaved stream.  The reference stores that tail as metadata
 and never reads it back; we keep byte-parity with that, and additionally
 expose a real ``rs_decode`` (syndromes -> Berlekamp-Massey -> Chien search ->
 Forney) for the optional repair path.
+
+Encoding cost.  Parity is linear over GF(2^8): the remainder of
+``msg(x) * x^nsym / g(x)`` is the XOR over message bytes ``m_i`` of
+``m_i * (x^(k+nsym) mod g)``, with ``k`` the byte's distance from the end
+of its block.  A table of those products for every (k, byte value) pair --
+one row of ``nsym`` bytes, stored as uint64 words -- turns a block's parity
+into a gather of one row per byte and an XOR reduction, with no per-byte
+multiply.  ``rs_parity_tails`` does this for every block of every payload
+of a document at once (one gather, one ``bitwise_xor.reduceat``), so the
+cost is O(bytes * nsym / 8) word operations in a few numpy calls.  The
+table is built on first use per ``nsym`` and grown only as far as the
+longest block seen needs (at most ``nsize - nsym`` distances).
 """
 
 from __future__ import annotations
@@ -88,14 +100,10 @@ def _generator_poly(nsym: int) -> List[int]:
 
 _EXP_NP = np.array(_GF_EXP, dtype=np.uint8)   # len 512: log-sum lookups need no mod
 _LOG_NP = np.array(_GF_LOG, dtype=np.int16)
-_POW_CACHE: dict = {}  # nsym -> ndarray[maxk, nsym]: row k = x^k mod g(x)
 
 
 def _power_table(nsym: int, maxk: int) -> np.ndarray:
     """Rows of x^k mod g(x) (nsym bytes, highest degree first), k < maxk."""
-    tbl = _POW_CACHE.get(nsym)
-    if tbl is not None and len(tbl) >= maxk:
-        return tbl
     gtail = _generator_poly(nsym)[1:]
     rem = [0] * nsym
     rem[-1] = 1  # x^0 == 1
@@ -110,46 +118,71 @@ def _power_table(nsym: int, maxk: int) -> np.ndarray:
                 for r, c in zip(rem, gtail)
             ]
         rows.append(list(rem))
-    tbl = np.array(rows, dtype=np.uint8)
-    _POW_CACHE[nsym] = tbl
+    return np.array(rows, dtype=np.uint8)
+
+
+_PRODUCT_CACHE: dict = {}  # nsym -> uint64[k * 256 + b, words]: b * (x^(k+nsym) mod g)
+
+
+def _product_table(nsym: int, kmax: int) -> np.ndarray:
+    """Row ``k * 256 + b`` holds ``b * (x^(k+nsym) mod g)`` for k < kmax and
+    every byte b: ``nsym`` bytes zero-padded to whole uint64 words."""
+    tbl = _PRODUCT_CACHE.get(nsym)
+    if tbl is not None and len(tbl) >= kmax * 256:
+        return tbl
+    rows = _power_table(nsym, kmax + nsym)[nsym:]  # [kmax, nsym]
+    b = np.arange(256)
+    prod = _EXP_NP[_LOG_NP[b][None, :, None] + _LOG_NP[rows][:, None, :]]
+    prod[(b[None, :, None] == 0) | (rows[:, None, :] == 0)] = 0
+    words = -(-nsym // 8)
+    padded = np.zeros((kmax * 256, 8 * words), dtype=np.uint8)
+    padded[:, :nsym] = prod.reshape(-1, nsym)
+    tbl = padded.view(np.uint64)
+    _PRODUCT_CACHE[nsym] = tbl
     return tbl
 
 
-def _encode_block(msg: bytes, nsym: int) -> bytes:
-    """Systematic parity: remainder of msg(x)*x^nsym / g(x).
-
-    By linearity over GF(2^8) the remainder is the XOR over message bytes of
-    m_i * (x^{L-1-i+nsym} mod g) -- one vectorized log/exp multiply plus an
-    XOR reduction instead of the per-byte synthetic-division loop.
-    """
-    length = len(msg)
-    if length == 0:
-        return bytes(nsym)
-    m = np.frombuffer(msg, dtype=np.uint8)
-    tbl = _power_table(nsym, length + nsym)
-    rows = tbl[np.arange(length - 1, -1, -1) + nsym]  # k = L-1-i+nsym
-    prod = _EXP_NP[_LOG_NP[m][:, None] + _LOG_NP[rows]]
-    prod[(m[:, None] == 0) | (rows == 0)] = 0
-    rem = np.bitwise_xor.reduce(prod, axis=0)
-    return msg + rem.tobytes()
+def _streams(payloads, nsym: int, nsize: int) -> list:
+    """Full systematic streams: each ``nsize - nsym``-byte block (the last
+    of a payload may be shorter) followed by its parity."""
+    step = nsize - nsym
+    lens = [min(step, len(p) - s) for p in payloads for s in range(0, len(p), step)]
+    if lens:
+        ends = np.cumsum(lens)
+        k = np.repeat(ends, lens) - np.arange(1, ends[-1] + 1)  # distance to block end
+        buf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+        rows = _product_table(nsym, max(lens)).take(k * 256 + buf, axis=0)
+        par = np.bitwise_xor.reduceat(rows, ends - lens, axis=0).view(np.uint8)
+    out, j = [], 0
+    for data in payloads:
+        if not data:
+            out.append(bytes(nsym))
+            continue
+        parts = []
+        for i in range(0, len(data), step):
+            parts += (data[i : i + step], par[j, :nsym].tobytes())
+            j += 1
+        out.append(b"".join(parts))
+    return out
 
 
 def rs_encode(data: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
     """Systematic encode; payloads are chunked into ``nsize``-byte codewords."""
     if nsym <= 0:
         return bytes(data)
-    step = nsize - nsym
-    if not data:
-        return _encode_block(b"", nsym)
-    out = bytearray()
-    for i in range(0, len(data), step):
-        out += _encode_block(data[i : i + step], nsym)
-    return bytes(out)
+    return _streams([data], nsym, nsize)[0]
+
+
+def rs_parity_tails(payloads, nsym: int = 10, nsize: int = 255) -> list:
+    """``rs_parity_tail`` of every payload, computed in one pass."""
+    if nsym <= 0:
+        return [b"" for _ in payloads]
+    return [s[len(p):] for s, p in zip(_streams(payloads, nsym, nsize), payloads)]
 
 
 def rs_parity_tail(data: bytes, nsym: int = 10, nsize: int = 255) -> bytes:
     """The reference's stored artifact: ``rs_encode(data)[len(data):]``."""
-    return rs_encode(data, nsym, nsize)[len(data):]
+    return rs_parity_tails([data], nsym, nsize)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -224,10 +224,10 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> dict:
     tracking = TrackingTable(spark, config.tracking_path)
 
     docs = read_text_dir(spark, config.input_dir)
-    if docs.isEmpty():  # skip-if-empty gate (op 15, ref dags/dag.py:816-821)
+    total = docs.count()
+    if total == 0:  # skip-if-empty gate (op 15, ref dags/dag.py:816-821)
         return {"processed": 0, "skipped": 0, "failed": 0, "status": "skipped"}
 
-    total = docs.count()
     fresh = docs.join(
         F.broadcast(tracking.processed_hashes()), "file_hash", "left_anti"
     )
@@ -265,9 +265,11 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> dict:
         "text",
     ).write.mode("append").json(config.dlq_dir)
 
-    # tracking upsert (ops 9-10)
-    n_ok = ok.count()
-    n_bad = bad.count()
+    # tracking upsert (ops 9-10); both outcome counts in one pass over the cache
+    completed = F.col("status") == "completed"
+    n_ok, n_bad = encoded.agg(
+        F.count(F.when(completed, 1)), F.count(F.when(~completed, 1))
+    ).first()
     tracking.append_new(
         encoded.select(
             "file_hash",

@@ -2,13 +2,12 @@
 
 Mirrors the reference's runtime self-verification (SURVEY.md §5): round-trip
 equality, homopolymer-free invariant, chunk-size budget, dense indices, and
-the golden identity pairs shipped in the reference's own data directory.
+the golden identity pairs of the vendored corpus in ``tests/golden_corpus``.
 """
 
 import hashlib
 import os
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from airflow_pipeline_text_processing_spark.codec import (
@@ -26,7 +25,7 @@ from airflow_pipeline_text_processing_spark.codec import (
     trits_to_dna,
 )
 
-REF_INPUT = "/root/reference/data/input"
+GOLDEN_CORPUS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden_corpus")
 
 
 # ---------------------------------------------------------------- goldman
@@ -125,12 +124,12 @@ def test_chunk_records_shape():
         assert hashlib.md5(piece).hexdigest() == r["checksum"]
 
 
-@pytest.mark.skipif(not os.path.isdir(REF_INPUT), reason="reference absent")
 def test_golden_identity_pairs():
-    """The reference's in-repo golden pairs: encode->decode is identity."""
+    """The golden corpus (reconstructed FIXTURES.md A1 shapes):
+    encode->decode is identity."""
     for name in ["sample_input.txt", "sample2.txt", "sample3.txt",
                  "test_shakespear.txt"]:
-        with open(os.path.join(REF_INPUT, name), encoding="utf-8") as f:
+        with open(os.path.join(GOLDEN_CORPUS, name), encoding="utf-8") as f:
             text = f.read()
         recs = build_chunks(text)
         rebuilt = "".join(

@@ -19,6 +19,10 @@ from airflow_pipeline_text_processing_spark.plans.pipeline import (
 from airflow_pipeline_text_processing_spark.sources.text_dir import with_descriptor
 from airflow_pipeline_text_processing_spark.sources.tracking import TrackingTable
 
+# Reconstructed FIXTURES.md A1 corpus (same shapes as the reference's own
+# data/input files, not their bytes)
+GOLDEN_CORPUS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden_corpus")
+
 TEXTS = [
     "hello world",
     "Test encodage.",
@@ -262,8 +266,11 @@ def test_jdbc_tracking_roundtrip(spark, tmp_path):
 
 
 def test_golden_reference_corpus(spark, tmp_path):
+    """The FIXTURES.md A1 corpus shapes (tests/golden_corpus): ASCII prose,
+    accented multi-line text, a 14-byte file with no trailing newline and a
+    two-chunk file all round-trip exactly through one tick."""
     cfg = PipelineConfig(
-        input_dir="/root/reference/data/input",
+        input_dir=GOLDEN_CORPUS,
         output_dir=str(tmp_path / "out"),
         tracking_path=str(tmp_path / "tracking"),
         dlq_dir=str(tmp_path / "dlq"),
@@ -272,7 +279,7 @@ def test_golden_reference_corpus(spark, tmp_path):
     assert res["processed"] == 4 and res["failed"] == 0
     out = spark.read.json(str(tmp_path / "out" / "processed")).collect()
     for row in out:
-        golden = os.path.join("/root/reference/data/input", row.filename)
+        golden = os.path.join(GOLDEN_CORPUS, row.filename)
         with open(golden, encoding="utf-8") as f:
             assert row.text == f.read()
 
